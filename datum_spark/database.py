@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 
 from . import util
 from .functions.dialect import translate_sql
+from .functions.geometry_sql import ensure_sql_functions
 from .session import get_session
 from .table import Table
 
@@ -215,25 +216,22 @@ class Database:
         self._registered.add(name)
 
     def ensure_geom_fns(self) -> None:
-        """Idempotently register the ST_* SQL pack (used by the execute()
-        gateway AND by ``where=`` fragments on Table.query/read — reference
-        users wrote PostGIS functions in both places), plus the text
-        cleaning pack (normalize_text / token_count)."""
-        if not getattr(self, "_geom_fns_registered", False):
-            from .functions.geometry_sql import (
-                register_geometry_sql_functions,
-            )
-            from .operators.text import register_text_sql_functions
-
-            register_geometry_sql_functions(self.spark)
-            register_text_sql_functions(self.spark)
-            self._geom_fns_registered = True
+        """Compatibility no-op.  The ST_* and text SQL packs are always
+        available: ``execute``/``sql``/views and ``where=`` fragments
+        register the pack functions a statement calls on first use
+        (:func:`~.functions.geometry_sql.ensure_sql_functions`)."""
 
     def register_all(self) -> None:
         for name in self.tables:
             self._register(name)
         self._restore_views()
-        self.ensure_geom_fns()
+
+    def _translate(self, stmt: str) -> str:
+        """``stmt`` in Spark SQL, with the pack functions it calls
+        registered."""
+        sql = translate_sql(stmt)
+        ensure_sql_functions(self.spark, sql)
+        return sql
 
     # -- SQL gateway (Tier B) -------------------------------------------------
 
@@ -244,8 +242,7 @@ class Database:
         dialect shim (SURVEY §4) rewrites common idioms; the statement then
         goes through Spark's own parser (no string splicing, §1.4#7).
         """
-        self.register_all()
-        df = self.spark.sql(translate_sql(stmt))
+        df = self.sql(stmt)
         if not df.columns:
             return None
         return [row.asDict() for row in df.collect()]
@@ -254,7 +251,7 @@ class Database:
         """Spark-native variant of :meth:`execute`: returns the DataFrame
         (lazy logical plan) instead of collecting."""
         self.register_all()
-        return self.spark.sql(translate_sql(stmt))
+        return self.spark.sql(self._translate(stmt))
 
     # -- DDL -----------------------------------------------------------------
 
@@ -385,7 +382,8 @@ class Database:
         util.check_identifier(name)
         self.register_all()
         self.spark.sql(
-            f"CREATE OR REPLACE TEMP VIEW {name} AS {translate_sql(select_stmt)}")
+            f"CREATE OR REPLACE TEMP VIEW {name} AS "
+            f"{self._translate(select_stmt)}")
         self._views.add(name)
         if self.scheme == "file":
             views = self._load_meta("_views")
@@ -411,15 +409,14 @@ class Database:
             for table in self.tables:
                 self._register(table)
             self.spark.sql(f"CREATE OR REPLACE TEMP VIEW {name} "
-                           f"AS {translate_sql(stmt)}")
+                           f"AS {self._translate(stmt)}")
             self._views.add(name)
 
     def create_mview(self, name: str, select_stmt: str) -> None:
         """Materialized view → CTAS to storage
         (reference: ``datum/postgis/database.py:118-121``)."""
         util.check_identifier(name)
-        self.register_all()
-        df = self.spark.sql(translate_sql(select_stmt))
+        df = self.sql(select_stmt)
         self._write_table(name, df, mode="overwrite")
         self._mviews.add(name)
         self._register(name)

@@ -15,7 +15,7 @@ types.
 
 Pure Python on plain tuples — no Spark imports; the Spark layer wraps
 these per-geometry functions in Arrow-batched pandas UDFs
-(``geometry.py:register_overlay_ops``), the same embarrassingly-parallel
+(``geometry.py:pandas_udfs``), the same embarrassingly-parallel
 posture as ``st_simplify``: per-row compute, zero shuffle, cost is one
 Arrow round-trip of the geometry column.
 

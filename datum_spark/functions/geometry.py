@@ -466,94 +466,96 @@ def _snaptogrid_one(wkt, size: float):
     return _re.sub(_COORD_RE, repl, wkt)
 
 
-def register_vertex_ops(spark) -> None:
-    """Register st_simplify(wkt, tol) / st_convexhull(wkt) /
-    st_transform(wkt, from_srid, to_srid) as SQL functions
-    (pandas-UDF-backed — the only gateway ST_* that leave the JVM:
-    vertex reduction needs a stack, reprojection needs trig; still
-    Arrow-batched, never per-row Python).  st_transform covers the
-    reference's ``ST_Transform`` splices in ``where=``/``execute``
-    (``datum/postgis/table.py:54-59``), same math as ``read(to_srid=)``."""
+def pandas_udfs() -> dict:
+    """The pandas-UDF-backed ST_* functions by SQL name — the only
+    gateway ST_* that leave the JVM, still Arrow-batched, never per-row
+    Python.  Registered on demand by :mod:`.geometry_sql`.
+
+    - st_simplify(wkt, tol) / st_convexhull(wkt): vertex reduction needs
+      a stack;
+    - st_transform(wkt, from_srid, to_srid): reprojection needs trig; it
+      covers the reference's ``ST_Transform`` splices in
+      ``where=``/``execute`` (``datum/postgis/table.py:54-59``), same
+      math as ``read(to_srid=)``;
+    - st_snaptogrid(wkt, size);
+    - the constructive pack st_intersection / st_union / st_difference /
+      st_symdifference / st_buffer, plus st_isvalid / st_isvalidreason /
+      st_makevalid — the last PostGIS-delegation surface the
+      reference's spatial-ETL users splice into ``where=``/
+      ``create_view`` SQL (``datum/postgis/table.py:157-158``,
+      ``database.py:108-111``).  Backed by the Martinez–Rueda sweep in
+      :mod:`.clipping`: per-geometry compute, embarrassingly parallel,
+      zero shuffle.  Polygon overlay output is POLYGON/MULTIPOLYGON WKT
+      ('POLYGON EMPTY' when empty); st_buffer takes points/lines/
+      polygons (negative distance = polygon erosion) with PostGIS's
+      default 8 quad segments.
+    """
+    # return types as DataType objects: a DDL string needs an active
+    # SparkContext to parse, and the UDFs are built once per process
+    from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("string")
+    from .clipping import buffer_wkt, is_valid_wkt, make_valid_wkt, \
+        overlay_wkt
+
+    @pandas_udf(T.StringType())
     def _st_simplify(wkt: pd.Series, tol: pd.Series) -> pd.Series:
         return pd.Series([_simplify_one(w, float(t))
                           for w, t in zip(wkt, tol)])
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_convexhull(wkt: pd.Series) -> pd.Series:
         return wkt.map(_hull_one)
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_transform(wkt: pd.Series, from_srid: pd.Series,
                       to_srid: pd.Series) -> pd.Series:
         cache: dict = {}
         return pd.Series([_transform_one(w, f, t, cache)
                           for w, f, t in zip(wkt, from_srid, to_srid)])
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_snaptogrid(wkt: pd.Series, size: pd.Series) -> pd.Series:
         return pd.Series([_snaptogrid_one(w, float(s))
                           if s is not None else None
                           for w, s in zip(wkt, size)])
 
-    spark.udf.register("st_simplify", _st_simplify)
-    spark.udf.register("st_convexhull", _st_convexhull)
-    spark.udf.register("st_transform", _st_transform)
-    spark.udf.register("st_snaptogrid", _st_snaptogrid)
-    register_overlay_ops(spark)
-
-
-def register_overlay_ops(spark) -> None:
-    """Register the constructive geometry pack: st_intersection /
-    st_union / st_difference / st_symdifference / st_buffer — the last
-    PostGIS-delegation surface the reference's spatial-ETL users splice
-    into ``where=``/``create_view`` SQL
-    (``datum/postgis/table.py:157-158``, ``database.py:108-111``).
-
-    Backed by the Martinez–Rueda sweep in :mod:`.clipping` as
-    Arrow-batched pandas UDFs: per-geometry compute, embarrassingly
-    parallel, zero shuffle — the same posture as st_simplify.  Polygon
-    overlay output is POLYGON/MULTIPOLYGON WKT ('POLYGON EMPTY' when
-    empty); st_buffer takes points/lines/polygons (negative distance =
-    polygon erosion) with PostGIS's default 8 quad segments."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .clipping import buffer_wkt, overlay_wkt
-
     def _make(op):
-        @pandas_udf("string")
+        @pandas_udf(T.StringType())
         def _f(a: pd.Series, b: pd.Series) -> pd.Series:
             return pd.Series([overlay_wkt(x, y, op)
                               for x, y in zip(a, b)])
         return _f
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_buffer(w: pd.Series, d: pd.Series) -> pd.Series:
         return pd.Series([buffer_wkt(x, float(r)) if r is not None else None
                           for x, r in zip(w, d)])
 
-    from .clipping import is_valid_wkt, make_valid_wkt
-
-    @pandas_udf("boolean")
+    @pandas_udf(T.BooleanType())
     def _st_isvalid(w: pd.Series) -> pd.Series:
         return pd.Series([is_valid_wkt(x)[0] for x in w], dtype="object")
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_isvalidreason(w: pd.Series) -> pd.Series:
         return pd.Series(["Valid Geometry" if ok else reason
                           for ok, reason in (is_valid_wkt(x) for x in w)])
 
-    @pandas_udf("string")
+    @pandas_udf(T.StringType())
     def _st_makevalid(w: pd.Series) -> pd.Series:
         return w.map(make_valid_wkt, na_action="ignore")
 
-    spark.udf.register("st_intersection", _make("intersection"))
-    spark.udf.register("st_union", _make("union"))
-    spark.udf.register("st_difference", _make("difference"))
-    spark.udf.register("st_symdifference", _make("symdifference"))
-    spark.udf.register("st_buffer", _st_buffer)
-    spark.udf.register("st_isvalid", _st_isvalid)
-    spark.udf.register("st_isvalidreason", _st_isvalidreason)
-    spark.udf.register("st_makevalid", _st_makevalid)
+    return {
+        "st_simplify": _st_simplify,
+        "st_convexhull": _st_convexhull,
+        "st_transform": _st_transform,
+        "st_snaptogrid": _st_snaptogrid,
+        "st_intersection": _make("intersection"),
+        "st_union": _make("union"),
+        "st_difference": _make("difference"),
+        "st_symdifference": _make("symdifference"),
+        "st_buffer": _st_buffer,
+        "st_isvalid": _st_isvalid,
+        "st_isvalidreason": _st_isvalidreason,
+        "st_makevalid": _st_makevalid,
+    }

@@ -6,10 +6,14 @@ they are Spark *SQL scalar UDFs* (``CREATE FUNCTION … RETURN <expr>``) —
 pure catalyst expressions, JVM-side and codegen-friendly, NOT Python UDFs.
 Geometry stays WKT text end-to-end, matching the engine's storage model
 (the reference itself stores geom as text, ``datum/postgis/database.py:
-83-88``).
+83-88``).  A session registers a function the first time one of its
+statements calls it (:func:`ensure_sql_functions`).
 """
 
 from __future__ import annotations
+
+import functools
+import re
 
 from pyspark.sql import SparkSession
 
@@ -1205,27 +1209,89 @@ _FUNCTIONS["st_boundary"] = (
     "ELSE NULL END")
 
 
+# ``name(`` / ```name`(`` calls, any case.  String literals are scanned
+# too: a name inside one only costs an unneeded registration, while a
+# literal split could miss a call after a backslash-escaped quote.
+_CALL = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)`?\s*\(")
+
+
+def _called(sql: str) -> set[str]:
+    return {name.lower() for name in _CALL.findall(sql)}
+
+
+@functools.cache
+def _pack() -> tuple[dict, dict]:
+    """The whole SQL pack, built once per process: ``(pack, needs)``.
+    ``pack`` maps each name to its CREATE FUNCTION statement or its
+    pandas UDF, in a valid registration order (every SQL body calls
+    only names defined before it); ``needs`` maps each name to itself
+    plus every pack name its body calls, transitively."""
+    from ..operators.text import text_sql_functions
+    from .geometry import pandas_udfs
+
+    bodies = {**_FUNCTIONS, **text_sql_functions()}
+    pack: dict = {
+        name: f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
+              f"RETURNS {ret} RETURN {body}"
+        for name, (sig, ret, body) in bodies.items()}
+    pack.update(pandas_udfs())
+    needs: dict[str, frozenset] = {}
+    for name in pack:
+        calls = _called(bodies[name][2]) if name in bodies else set()
+        needs[name] = frozenset({name}).union(
+            *(needs[c] for c in calls & needs.keys()))
+    return pack, needs
+
+
+def _registered(spark: SparkSession) -> set[str]:
+    """The pack names registered in ``spark`` (temporary functions are
+    per session, so the set lives on the session object)."""
+    names = getattr(spark, "_datum_sql_pack", None)
+    if names is None:
+        names = set()
+        try:
+            spark._datum_sql_pack = names
+        except AttributeError:  # exotic session proxies: re-register
+            pass
+    return names
+
+
+def register_sql_functions(spark: SparkSession, names,
+                           force: bool = False) -> None:
+    """Register the pack functions among ``names`` and every pack
+    function their bodies call, skipping those ``spark`` already has
+    (``force`` re-registers them, e.g. after a ``DROP TEMPORARY
+    FUNCTION``).  Names outside the pack are ignored."""
+    pack, needs = _pack()
+    wanted = set().union(*(needs[n] for n in set(names) & needs.keys()))
+    done = _registered(spark)
+    if not force:
+        wanted -= done
+    for name, how in pack.items():
+        if name in wanted:
+            if isinstance(how, str):
+                spark.sql(how)
+            else:
+                spark.udf.register(name, how)
+            done.add(name)
+
+
+def ensure_sql_functions(spark: SparkSession, sql: str) -> None:
+    """Register the pack functions that the Spark SQL text ``sql``
+    calls, before it reaches ``spark.sql`` or ``F.expr``.  Creating the
+    whole pack costs ~9 s cold, so a session pays only for the
+    functions its statements use, once."""
+    register_sql_functions(spark, _called(sql))
+
+
 def register_geometry_sql_functions(spark: SparkSession,
                                     force: bool = False) -> None:
-    """Idempotently register the ST_* pack as temporary SQL functions.
+    """Register the whole pack: the ST_* SQL bodies, the pandas-UDF
+    ST_* functions and the text functions.
 
-    Helpers (``st__*``) are referenced by later bodies, so registration
-    follows dict insertion order.  Analyzing the ~30 CREATE FUNCTION
-    bodies costs ~1 s, so a session that already has the pack is
-    skipped (marker attribute on the session; ``force`` re-registers —
-    e.g. after a ``DROP TEMPORARY FUNCTION``).
+    Analyzing the 59 CREATE FUNCTION bodies costs ~9 s cold; names the
+    session already has are skipped (``force`` re-registers them).
+    Statements through ``Database``/``Table`` need no call: they
+    register what they use on demand (:func:`ensure_sql_functions`).
     """
-    if not force and getattr(spark, "_datum_st_registered", False):
-        return
-    for name, (sig, ret, body) in _FUNCTIONS.items():
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
-                  f"RETURNS {ret} RETURN {body}")
-    # st_simplify / st_convexhull: pandas-UDF-backed (vertex reduction
-    # needs a stack — the only ST_* pair that leaves the JVM)
-    from .geometry import register_vertex_ops
-
-    register_vertex_ops(spark)
-    try:
-        spark._datum_st_registered = True
-    except AttributeError:      # exotic session proxies: just re-register
-        pass
+    register_sql_functions(spark, _pack()[0], force)

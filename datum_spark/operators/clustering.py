@@ -314,14 +314,15 @@ def _driver_vectors(v, expansion: int = 6):
     rows = v.select("__e").collect()
     if not rows:
         return None
-    # ragged vector lengths (a corrupt fixture / mixed-width corpus)
-    # must fall back to the distributed loop — np.array would raise an
-    # inhomogeneous-shape ValueError (or build an object array) where
-    # the zip_with path degrades via null propagation (ADVICE r13)
-    width = len(rows[0]["__e"])
-    if any(len(r["__e"]) != width for r in rows):
+    # ragged vector lengths or a null vector (a corrupt fixture /
+    # mixed-width corpus) must fall back to the distributed loop —
+    # np.array would raise an inhomogeneous-shape ValueError (or build
+    # an object array) where the zip_with path degrades via null
+    # propagation (ADVICE r13)
+    vecs = [r["__e"] for r in rows]
+    if any(e is None for e in vecs) or len({len(e) for e in vecs}) > 1:
         return None
-    return np.array([r["__e"] for r in rows], dtype=np.float64)
+    return np.array(vecs, dtype=np.float64)
 
 
 def _rounded_d2_matrix(x, centers, quantize: int):

@@ -178,10 +178,7 @@ def polygon_overlay_join(left: DataFrame, right: DataFrame,
     unless None); pairs with zero intersection area are dropped.
     Column names must not collide (alias beforehand).
     """
-    from ..functions.geometry import register_overlay_ops
-
     register_geometry_sql_functions(left.sparkSession)
-    register_overlay_ops(left.sparkSession)
     cs = float(cell_size)
     lt = _with_env_cells(left, lwkt, cs, "__l")
     rt = _with_env_cells(right, rwkt, cs, "__r")

@@ -27,7 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from datum_spark.functions.geometry import register_overlay_ops  # noqa: E402
 from datum_spark.functions.geometry_sql import (  # noqa: E402
     register_geometry_sql_functions,
 )
@@ -55,7 +54,6 @@ def main() -> int:
     spark = get_session(app_name="scale_overlay")
     spark.sparkContext.setLogLevel("ERROR")
     register_geometry_sql_functions(spark)
-    register_overlay_ops(spark)
     out: dict = {"n_pairs_per_tier": n_pairs, "cpus": os.cpu_count()}
 
     # tier 1: per-row cost by vertex count (overlapping star pairs)

@@ -392,3 +392,28 @@ def test_sql_round_vec_matches_decimal_reference():
         got, want = _sql_round_vec(x, nd), ref(x, nd)
         assert (got == want).all()
         assert (np.signbit(got) == np.signbit(want)).all()
+
+
+def test_driver_bias_terms_follow_sql_order(spark):
+    """The driver's bias gradient terms are the distributed SQL's
+    ``((p − y) · c) · B / n`` with ``c = n / B``, bit for bit, also on
+    doubles where grouping ``(n / B) · B / n`` first is off by an ulp."""
+    import numpy as np
+
+    from datum_spark.operators.classifier import _bias_terms
+
+    rng = np.random.default_rng(11)
+    resid = rng.uniform(-1.0, 1.0, 2000)
+    n = rng.integers(1, 400, 2000).astype(np.float64)
+    nb = 1000.0
+    got = _bias_terms(resid, n, nb)
+    grouped = resid * ((n / nb) * nb / n)
+    one_ulp = (got != grouped) & (np.nextafter(grouped, got) == got)
+    idx = np.nonzero(one_ulp)[0][:25]
+    assert len(idx) == 25
+    df = spark.createDataFrame(
+        [(float(resid[i]), float(n[i])) for i in idx], "r double, n double")
+    sql = [r["t"] for r in df.select(
+        (F.col("r") * (F.col("n") / F.lit(nb)) * F.lit(nb) / F.col("n"))
+        .alias("t")).collect()]
+    assert sql == [float(got[i]) for i in idx]

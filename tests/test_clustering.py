@@ -255,3 +255,19 @@ def test_driver_pq_lloyd_matches_distributed(spark, monkeypatch):
     codes_b, books_b = pq_train_encode(df, m=4, ksub=8, iters=3)
     assert books_a == books_b
     assert rows_a == sorted(map(tuple, codes_b.collect()))
+
+
+def test_driver_vectors_null_vector_falls_back(spark):
+    """A null vector, first row or later, is ragged: the driver gate
+    returns None so the distributed loop runs."""
+    from datum_spark.operators.clustering import _driver_vectors
+
+    def vectors(null_id):
+        # spark.range carries a size estimate, so the driver gate opens
+        return spark.range(3).selectExpr(
+            f"IF(id = {null_id}, NULL, array(CAST(id AS DOUBLE), 1D)) "
+            "AS __e")
+
+    assert _driver_vectors(vectors(-1)).shape == (3, 2)
+    assert _driver_vectors(vectors(0)) is None
+    assert _driver_vectors(vectors(2)) is None
